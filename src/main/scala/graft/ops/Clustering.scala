@@ -46,14 +46,9 @@ object Clustering {
   private[graft] def sqDistHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
 
-  /** Fixed-iteration Lloyd k-means.
+  /** Fixed-iteration Lloyd k-means. Rounds and generations:
+    * [[graft.util.Fixpoint]].
     *
-    * @param checkpointEvery lineage guard for high iteration counts:
-    *        every N rounds the k-row centroid frame is lazily
-    *        local-checkpointed, truncating the otherwise
-    *        linearly-growing plan (each round embeds all previous
-    *        rounds' aggregates twice — a plan-size bomb at iters=25).
-    *        0 disables; results are identical either way.
     * @return (vec_id, cluster, d2) — the assignment under the FINAL
     *         centroids, d2 = exact squared distance (callers round for
     *         cross-engine hashing).
@@ -64,7 +59,6 @@ object Clustering {
       vecCol: String,
       k: Int,
       iters: Int = 2,
-      checkpointEvery: Int = 5,
   ): DataFrame = {
     // exact float→double widening once, up front
     val vecs = emb.select(
@@ -80,7 +74,7 @@ object Clustering {
     // k-row frame. n < k degrades gracefully to n centroids.
     val seeded = vecs.withColumn("_h",
       md5(concat(lit("kmeans"), col("vec_id").cast("string"))))
-    var centroids = seeded
+    val init = seeded
       .orderBy(col("_h"), col("vec_id"))
       .limit(k)
       .withColumn("cluster",
@@ -96,23 +90,21 @@ object Clustering {
         .select(col("vec_id"), col("_best.cluster").as("cluster"),
           col("_best.d2").as("d2"))
 
-    for (i <- 1 to iters) {
+    val run = graft.util.Fixpoint.iterate("kmeans", iters, init) { centroids =>
       // update: exact decimal component sums (order-independent), one
       // double division per component, array rebuilt in index order
       val assigned = assign(centroids)
         .join(vecs, "vec_id")
         .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
-      centroids = assigned
+      assigned
         .groupBy("cluster", "pos")
         .agg((sum(col("x").cast("decimal(38,20)")).cast("double") /
           count(lit(1))).as("m"))
         .groupBy("cluster")
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           s => s("m")).as("c"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
-        centroids = centroids.localCheckpoint(eager = false)
     }
-    assign(centroids)
+    assign(run.df)
   }
 
   /** DuckDB spelling of [[kmeans]] — the oracle side, generated for the

@@ -364,6 +364,21 @@ object Dedup {
       .select("doc_a", "doc_b", "jac")
   }
 
+  /** Both CC loops' setup: the symmetrized edge list and the own-id
+    * label table, each checkpointed. Symmetrize in ONE pass: inline()
+    * emits the two directed copies of each pair from a single
+    * evaluation of the upstream (shingle→minhash→LSH→verify) lineage,
+    * straight into the edge checkpoint. */
+  private def ccSetup(pairs: DataFrame): (Lineage.Gen, Lineage.Gen) = {
+    val edges = Lineage.checkpoint(
+      pairs.select(inline(array(
+        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst"))))))
+    (edges, Lineage.checkpoint(
+      edges.df.select(col("src").as("id")).distinct()
+        .withColumn("label", col("id"))))
+  }
+
   /** Connected components over a duplicate-pair list: each doc gets the
     * minimum doc id reachable through pair edges as its `cluster_id` —
     * the step that turns pairwise near-dups into dedupable groups (keep
@@ -376,53 +391,24 @@ object Dedup {
     * only sees the converged/changed counter, never data. Rounds ≈ the
     * cluster graph's diameter — small for duplicate clusters, which are
     * near-cliques (for adversarial long-chain graphs, switch to
-    * large-star/small-star, same DataFrame skeleton).
-    * `localCheckpoint` truncates the growing lineage each round so the
-    * plan stays O(1) regardless of iteration count.
+    * large-star/small-star, same DataFrame skeleton). Rounds and
+    * generations: [[graft.util.Fixpoint]].
     */
   def duplicateClusters(pairs: DataFrame): DataFrame = {
-    // symmetrize in ONE pass over the pair pipeline: inline() emits the
-    // two directed copies of each pair from a single evaluation of the
-    // upstream (shingle→minhash→LSH→verify) lineage, where the earlier
-    // union-of-two-selects spelling needed the pair list checkpointed
-    // first so the two branches would not each re-run it — one
-    // pairs-sized localCheckpoint write+read dropped from the setup.
-    // Generations ROTATE (graft.util.Lineage): the label frame is
-    // corpus-sized, and without freeing, every round's checkpoint
-    // blocks stay in executor storage until a driver GC — rounds × |V|
-    // rows of dead weight in a long-lived session.
-    val edges = Lineage.checkpoint(
-      pairs.select(inline(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst"))))))
-    var labels = Lineage.checkpoint(
-      edges.df.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")))
-    // labels only ever DECREASE under min-propagation, so an unchanged
-    // label sum proves the fixed point — one aggregate per round instead
-    // of a join+diff; DECIMAL sum cannot overflow or lose precision
-    // coalesce guards the zero-pair corpus: sum over an empty frame is
-    // null, and without it the first compareTo below would NPE
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
-    var prevSum = labelSum(labels.df)
-    var converged = false
-    while (!converged) {
+    val (edges, init) = ccSetup(pairs)
+    // labels only ever DECREASE under min-propagation, so the label
+    // witness settles exactly at the fixed point — one aggregate per
+    // round instead of a join+diff
+    val run = graft.util.Fixpoint.converge("duplicateClusters", Int.MaxValue,
+        init.df, on = "label") { labels =>
       val neighbourLabels = edges.df
-        .join(labels.df.withColumnRenamed("id", "src"), "src")
+        .join(labels.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), col("label"))
-      val next = Lineage.rotate(
-        labels.df.union(neighbourLabels)
-          .groupBy("id").agg(min("label").as("label")),
-        labels)
-      val nextSum = labelSum(next.df)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
+      labels.union(neighbourLabels)
+        .groupBy("id").agg(min("label").as("label"))
     }
-    Lineage.free(edges)
-    labels.df.select(col("id").as("doc_id"), col("label").as("cluster_id"))
+    Seq(init, edges).foreach(Lineage.free)
+    run.df.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
   /** Connected components in O(log n) rounds: min-label hooking, a
@@ -461,64 +447,44 @@ object Dedup {
     * ordered chain stays logarithmic.
     *
     * Output contract unchanged: (doc_id, cluster_id = min reachable
-    * id). `maxRounds` bounds runaway iteration (and lets specs assert
-    * the logarithmic convergence).
+    * id). `maxRounds` bounds the hook rounds and the pointer chase
+    * together (and lets specs assert the logarithmic convergence);
+    * rounds and generations: [[graft.util.Fixpoint]].
     */
   def duplicateClustersFast(pairs: DataFrame, maxRounds: Int = 48): DataFrame = {
-    // generation rotation: see duplicateClusters. Symmetrize in ONE
-    // pass (inline of the two directed struct copies) so the upstream
-    // pair pipeline is evaluated exactly once, directly into the edge
-    // checkpoint — the former pairs-sized p0 checkpoint existed only to
-    // keep a union's two branches from re-running the upstream.
-    var edges = Lineage.checkpoint(
-      pairs.select(inline(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst"))))))
-    var labels = Lineage.checkpoint(
-      edges.df.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")))
-    var rounds = 0
-    while (!edges.df.isEmpty) {
-      rounds += 1
-      require(rounds <= maxRounds,
-        s"connected components did not converge in $maxRounds rounds")
-      // hook: min label over the closed neighbourhood of the
-      // contracted edge list (symmetric, so one flow direction covers
-      // every neighbourhood). Deliberately LAZY although the shortcut
-      // self-join below evaluates it twice: an eager per-round
-      // checkpoint was measured (r15, interleaved A/B ×3 at sf0.1)
-      // consistently SLOWER (lazy 11.6–13.4 s vs eager 14.8–20.5 s for
-      // the whole loop) — the per-round materialization job costs more
-      // than the duplicate join+aggregate at bench scale.
-      val hooked = labels.df.union(
-        edges.df.join(labels.df.withColumnRenamed("id", "src"), "src")
-          .select(col("dst").as("id"), col("label")))
-        .groupBy("id").agg(min("label").as("label"))
-      // shortcut: label ← label(label). Labels always point at node ids
-      // (mins of reachable sets), so the self-join hits; coalesce
-      // guards the root, whose label is itself
-      labels = Lineage.rotate(
-        hooked
-          .join(
-            hooked.select(col("id").as("label"), col("label").as("label2")),
-            Seq("label"), "left")
-          .select(col("id"), coalesce(col("label2"), col("label")).as("label")),
-        labels)
-      // contract: rewrite both endpoints onto the updated labels, drop
-      // self-loops (settled regions) and duplicate super-edges
-      edges = Lineage.rotate(
-        edges.df
-          .join(labels.df.select(col("id").as("src"), col("label").as("_ls")),
-            Seq("src"), "left")
-          .select(coalesce(col("_ls"), col("src")).as("_s"), col("dst"))
-          .join(labels.df.select(col("id").as("dst"), col("label").as("_ld")),
-            Seq("dst"), "left")
-          .select(col("_s").as("src"), coalesce(col("_ld"), col("dst")).as("dst"))
-          .filter(col("src") =!= col("dst"))
-          .distinct(),
-        edges)
-    }
-    Lineage.free(edges)
+    val (edges0, labels0) = ccSetup(pairs)
+    def shortcut(labels: DataFrame) = labels
+      .join(labels.select(col("id").as("label"), col("label").as("label2")),
+        Seq("label"), "left")
+      .select(col("id"), coalesce(col("label2"), col("label")).as("label"))
+    val hooks = graft.util.Fixpoint.loop("duplicateClustersFast", maxRounds,
+      Seq("edges" -> edges0.df, "labels" -> labels0.df), Seq(
+        "labels" -> { r =>
+          // hook: min label over the closed neighbourhood of the
+          // contracted (symmetric) edge list, then shortcut: label ←
+          // label(label); labels are node ids, coalesce guards the root.
+          // The hooked frame stays LAZY though the shortcut reads it
+          // twice: an eager checkpoint of it measured SLOWER (r15 A/B ×3
+          // at sf0.1: lazy 11.6–13.4 s vs eager 14.8–20.5 s per loop).
+          shortcut(r("labels").union(
+            r("edges").join(r("labels").withColumnRenamed("id", "src"), "src")
+              .select(col("dst").as("id"), col("label")))
+            .groupBy("id").agg(min("label").as("label")))
+        },
+        // contract: rewrite both endpoints onto the updated labels, drop
+        // self-loops (settled regions) and duplicate super-edges
+        "edges" -> { r =>
+          r("edges")
+            .join(r("labels").select(col("id").as("src"), col("label").as("_ls")),
+              Seq("src"), "left")
+            .select(coalesce(col("_ls"), col("src")).as("_s"), col("dst"))
+            .join(r("labels").select(col("id").as("dst"), col("label").as("_ld")),
+              Seq("dst"), "left")
+            .select(col("_s").as("src"), coalesce(col("_ld"), col("dst")).as("dst"))
+            .filter(col("src") =!= col("dst"))
+            .distinct()
+        }),
+      settled = Some(_("edges").isEmpty))
     // pointer-chase to the fixpoint: at loop exit every REGION ROOT
     // carries its component min (a root only settles once no contracted
     // edge touches its region), but contraction may have stranded
@@ -527,28 +493,11 @@ object Dedup {
     // the compressed depth (l ← l(l)), so this is log(strand depth)
     // label-table self-joins, no edge shuffles; the label sum is
     // strictly decreasing until the fixed point.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
-    var prevSum = labelSum(labels.df)
-    var settled = false
-    while (!settled) {
-      rounds += 1
-      require(rounds <= maxRounds,
-        s"connected components did not converge in $maxRounds rounds")
-      val next = Lineage.rotate(
-        labels.df
-          .join(
-            labels.df.select(col("id").as("label"), col("label").as("label2")),
-            Seq("label"), "left")
-          .select(col("id"), coalesce(col("label2"), col("label")).as("label")),
-        labels)
-      val nextSum = labelSum(next.df)
-      settled = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
-    }
-    labels.df.select(col("id").as("doc_id"), col("label").as("cluster_id"))
+    val chase = graft.util.Fixpoint.converge("duplicateClustersFast",
+      maxRounds - hooks.rounds, hooks("labels"), on = "label")(shortcut)
+    hooks.free()
+    Seq(edges0, labels0).foreach(Lineage.free)
+    chase.df.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
   /** The dedup pipeline's OUTPUT stage: drop every non-canonical cluster

@@ -130,14 +130,15 @@ object Graphs {
     * Scala doubles into the oracle SQL, so e.g. 1−0.85 (which is NOT
     * the double 0.15) agrees bit-for-bit cross-engine.
     *
+    * Rounds and generations: [[graft.util.Fixpoint]].
+    *
     * @return (x, r) — vertex and rank; ranks sum to 1 over the graph
     *         (symmetric graphs have no dangling mass).
     */
   def pageRank(
       edges: DataFrame,
       damping: Double = 0.85,
-      iters: Int = 3,
-      checkpointEvery: Int = 8): DataFrame = {
+      iters: Int = 3): DataFrame = {
     // the symmetrized edge list materializes ONCE, eagerly: it feeds
     // three derivations (degrees+outgoing, the vertex set, the count),
     // and the caller's edge plan is often itself an expensive self-join
@@ -158,27 +159,12 @@ object Graphs {
     // eager driver-side jobs are added — profiled 3.2× faster than
     // eagerly localCheckpoint-ing each generation (which pays a
     // scheduler round-trip + block write + codegen break per round).
-    // Both caches are explicitly unpersisted on loop exit, after the
-    // final generation materializes.
     val outgoing = directed.join(deg, "u").cache()
     val verts = directed.select(col("u").as("x")).distinct().cache()
     val n = verts.agg(count(lit(1)).as("n"))
-    var ranks = verts.crossJoin(broadcast(n))
+    val init = verts.crossJoin(broadcast(n))
       .select(col("x"), (lit(1.0) / col("n")).as("r"))
-    // high-iteration lineage guard: generations past `checkpointEvery`
-    // ROTATE through local checkpoints (graft.util.Lineage) so a 50-iter
-    // run neither overflows the planner with a 50-deep tree nor holds
-    // more than one |V|-sized generation of blocks. Small runs (the
-    // common analytics shape) never pay the materialization.
-    // When rotation WILL occur, the loop-invariant caches must
-    // materialize before the first in-loop checkpoint: the registry diff
-    // would otherwise attribute their blocks to that generation and free
-    // them mid-loop (the hitsBipartite edge-generation lesson).
-    if (checkpointEvery > 0 && iters > checkpointEvery) {
-      outgoing.count(); verts.count()
-    }
-    var gen: Option[graft.util.Lineage.Gen] = None
-    for (i <- 1 to iters) {
+    val run = graft.util.Fixpoint.iterate("pageRank", iters, init) { ranks =>
       val sums = ranks
         .join(outgoing, col("x") === col("u"))
         .select(col("v").as("x"), (col("r") / col("od")).as("cr"))
@@ -186,31 +172,19 @@ object Graphs {
         .agg(sum(col("cr").cast("decimal(38,20)")).cast("double").as("m"))
       // left join: general graphs have rank-sink vertices with no
       // in-edges (symmetric ones don't, but the operator shouldn't care)
-      ranks = verts.crossJoin(broadcast(n))
+      verts.crossJoin(broadcast(n))
         .join(sums, Seq("x"), "left")
         .select(col("x"),
           (lit(1 - damping) / col("n") +
             lit(damping) * coalesce(col("m"), lit(0.0))).as("r"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters) {
-        val next = gen match {
-          case Some(g) => graft.util.Lineage.rotate(ranks, g)
-          case None => graft.util.Lineage.checkpoint(ranks)
-        }
-        gen = Some(next)
-        ranks = next.df
-      }
     }
-    // loop-exit hygiene (round-9 discipline): materialize the final
-    // generation eagerly, then release every internal cache/checkpoint.
-    // Returning the lazy frame instead would either leak the loop
-    // caches for the session lifetime or — if the caller unpersisted
-    // them — silently recompute an iters-deep uncached tree.
-    val out = graft.util.Lineage.checkpoint(ranks)
-    gen.foreach(graft.util.Lineage.free)
+    // loop-exit hygiene (round-9 discipline): the caches go only after
+    // the final generation materializes; a lazy return would leak them
+    val out = run.finish(_.df)
     graft.util.Lineage.free(eGen)
     outgoing.unpersist(blocking = false)
     verts.unpersist(blocking = false)
-    out.df
+    out
   }
 
   /** DuckDB spelling of [[pageRank]] — unrolled-CTE oracle generated for
@@ -260,11 +234,9 @@ object Graphs {
     * list; rounds are data-dependent but small in practice (a round
     * removes EVERY sub-k vertex simultaneously, so round count is the
     * peel DEPTH, not the vertex count). Like the CC loop, each round
-    * pays one scalar edge-count action for convergence detection —
-    * inherent to iterate-to-fixpoint — and the edge lineage is rotated
-    * through `localCheckpoint` so plans don't grow with rounds.
-    * `maxRounds` is a runaway guard, not a truncation: hitting it
-    * throws rather than returning a non-fixpoint.
+    * pays one scalar frontier-count action for convergence detection —
+    * inherent to iterate-to-fixpoint. Rounds, the `maxRounds` runaway
+    * guard and generations: [[graft.util.Fixpoint]].
     */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 64): DataFrame = {
     // DELTA peeling: the edge list is scanned, never rewritten. Keep a
@@ -283,41 +255,29 @@ object Graphs {
       .unionAll(edges.select(col("v").as("x"), col("u").as("y")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val verts = sym.select(col("x")).distinct()
-    var deg = sym.groupBy("x").agg(count(lit(1)).as("d"))
-    var gen: Option[graft.util.Lineage.Gen] = None
-    var rounds = 0
-    var done = false
-    while (!done) {
-      val removed = deg.filter(col("d") < k).select(col("x").as("y")).cache()
-      if (removed.count() == 0) done = true
-      else {
-        val loss = sym.join(removed, "y")
-          .groupBy("x").agg(count(lit(1)).as("lost"))
-        val nxt = deg.filter(col("d") >= k)
-          .join(loss, Seq("x"), "left")
-          .select(col("x"),
-            (col("d") - coalesce(col("lost"), lit(0L))).as("d"))
-        val g = gen match {
-          case Some(prev) => graft.util.Lineage.rotate(nxt, prev)
-          case None => graft.util.Lineage.checkpoint(nxt)
-        }
-        gen = Some(g)
-        deg = g.df
-        rounds += 1
-        if (rounds >= maxRounds)
-          throw new IllegalStateException(
-            s"kCore(k=$k) did not reach a fixpoint in $maxRounds rounds")
-      }
-      removed.unpersist()
+    // the sub-k frontier: cached by the witness that counts it, read by
+    // the step that peels it, released once the next generation exists
+    var removed: DataFrame = null
+    val run = graft.util.Fixpoint.until(s"kCore(k=$k)", maxRounds,
+        sym.groupBy("x").agg(count(lit(1)).as("d"))) { deg =>
+      if (removed != null) removed.unpersist()
+      removed = deg.filter(col("d") < k).select(col("x").as("y")).cache()
+      removed.count() == 0
+    } { deg =>
+      val loss = sym.join(removed, "y")
+        .groupBy("x").agg(count(lit(1)).as("lost"))
+      deg.filter(col("d") >= k)
+        .join(loss, Seq("x"), "left")
+        .select(col("x"),
+          (col("d") - coalesce(col("lost"), lit(0L))).as("d"))
     }
-    // loop-exit hygiene: see [[pageRank]]
-    val out = graft.util.Lineage.checkpoint(
-      verts.join(deg.withColumnRenamed("d", "core_degree"), Seq("x"), "left")
+    removed.unpersist()
+    val out = run.finish(r =>
+      verts.join(r.df.withColumnRenamed("d", "core_degree"), Seq("x"), "left")
         .select(col("x"), col("core_degree").isNotNull.as("in_core"),
           col("core_degree")))
-    gen.foreach(graft.util.Lineage.free)
     sym.unpersist(blocking = false)
-    out.df
+    out
   }
 
   /** DuckDB spelling of [[kCore]]: an unrolled-CTE oracle with `rounds`
@@ -405,9 +365,8 @@ object Graphs {
     * (reached-count, distance-sum) pair — min-relaxation monotonically
     * grows the reached set and shrinks the sum, so the pair is a
     * fixpoint witness — at the cost of one 1-row action per round (the
-    * CC/k-core scalar discipline). Lineage rotates through
-    * `localCheckpoint` every 8 rounds; `maxRounds` is a runaway guard
-    * that throws rather than returning a non-fixpoint.
+    * CC/k-core scalar discipline). Rounds, the `maxRounds` runaway guard
+    * and generations: [[graft.util.Fixpoint]].
     *
     * @return every vertex with `dist` (BIGINT), NULL when unreachable.
     */
@@ -417,42 +376,24 @@ object Graphs {
         col("w").cast("long")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val verts = e.select(col("u").as("x")).distinct()
-    var dist = verts.filter(col("x") === source)
-      .select(col("x"), lit(0L).as("d"))
-    var state = (-1L, -1L)
-    var rounds = 0
-    var done = false
-    while (!done) {
+    // a `source` outside the edge list leaves the frontier empty: the
+    // witness reads (0, 0) twice and every vertex returns NULL dist
+    val run = graft.util.Fixpoint.converge("sssp", maxRounds,
+        verts.filter(col("x") === source).select(col("x"), lit(0L).as("d")),
+        on = "d") { dist =>
       // USING-join on the renamed frontier key: the rename mints fresh
       // attribute ids, so the shared lineage with `e` never trips
       // Spark's self-join ambiguity check
-      var nxt = dist.withColumnRenamed("x", "u")
+      dist.withColumnRenamed("x", "u")
         .join(e, Seq("u"))
         .select(col("v").as("x"), (col("d") + col("w")).as("d"))
         .unionAll(dist)
         .groupBy("x").agg(min(col("d")).as("d"))
-      if (rounds % 8 == 7) nxt = nxt.localCheckpoint(eager = false)
-      nxt = nxt.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val row = nxt.agg(count(lit(1)), sum(col("d"))).head()
-      // null-safe witness read: when `source` is not a vertex of the
-      // edge list the frontier is empty, so sum(d) is NULL — the
-      // contract then returns every vertex at NULL dist, not an NPE
-      val s2 = (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
-      dist.unpersist()
-      dist = nxt
-      done = s2 == state
-      state = s2
-      rounds += 1
-      if (!done && rounds >= maxRounds)
-        throw new IllegalStateException(
-          s"sssp did not reach a fixpoint in $maxRounds rounds")
     }
-    // loop-exit hygiene: see [[pageRank]]
-    val out = graft.util.Lineage.checkpoint(
-      verts.join(dist, Seq("x"), "left").select(col("x"), col("d").as("dist")))
-    dist.unpersist(blocking = false)
+    val out = run.finish(r =>
+      verts.join(r.df, Seq("x"), "left").select(col("x"), col("d").as("dist")))
     e.unpersist(blocking = false)
-    out.df
+    out
   }
 
   /** DuckDB spelling of [[sssp]]: `rounds` unrolled relaxation passes
@@ -503,27 +444,26 @@ object Graphs {
     val outgoing = directed.join(wdeg, "u").cache()
     val verts = directed.select(col("u").as("x")).distinct().cache()
     val n = verts.agg(count(lit(1)).as("n"))
-    var ranks = verts.crossJoin(broadcast(n))
+    val init = verts.crossJoin(broadcast(n))
       .select(col("x"), (lit(1.0) / col("n")).as("r"))
-    for (_ <- 1 to iters) {
+    val run = graft.util.Fixpoint.iterate("pageRankWeighted", iters, init) { ranks =>
       val sums = ranks
         .join(outgoing, col("x") === col("u"))
         .select(col("v").as("x"),
           (col("r") * col("w") / col("wd")).as("cr"))
         .groupBy("x")
         .agg(sum(col("cr").cast("decimal(38,20)")).cast("double").as("m"))
-      ranks = verts.crossJoin(broadcast(n))
+      verts.crossJoin(broadcast(n))
         .join(sums, Seq("x"), "left")
         .select(col("x"),
           (lit(1 - damping) / col("n") +
             lit(damping) * coalesce(col("m"), lit(0.0))).as("r"))
     }
-    // loop-exit hygiene: see [[pageRank]]
-    val out = graft.util.Lineage.checkpoint(ranks)
+    val out = run.finish(_.df)
     graft.util.Lineage.free(eGen)
     outgoing.unpersist(blocking = false)
     verts.unpersist(blocking = false)
-    out.df
+    out
   }
 
   /** DuckDB spelling of [[pageRankWeighted]] — unrolled like
@@ -586,10 +526,10 @@ object Graphs {
     val sym0 = edges.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
     val sym = if (cacheEdges) sym0.cache() else sym0
-    var labels = sym.select(col("src").as("x")).distinct()
+    val init = sym.select(col("src").as("x")).distinct()
       .select(col("x"), col("x").as("lbl"))
-    for (_ <- 1 to rounds) {
-      labels = sym
+    val run = graft.util.Fixpoint.iterate("labelPropagation", rounds, init) { labels =>
+      sym
         .join(labels.withColumnRenamed("x", "src"), "src")
         .groupBy(col("dst").as("x"), col("lbl"))
         .agg(count(lit(1)).as("cnt"))
@@ -597,11 +537,9 @@ object Graphs {
         .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("x"), (-col("m.nl")).as("lbl"))
     }
-    // loop-exit hygiene: see [[pageRank]]
-    val out = graft.util.Lineage.checkpoint(
-      labels.select(col("x"), col("lbl").as("community")))
+    val out = run.finish(_.df.select(col("x"), col("lbl").as("community")))
     sym.unpersist(blocking = false)
-    out.df
+    out
   }
 
   /** DuckDB spelling of [[labelPropagation]]: `rounds` unrolled CTE
@@ -649,25 +587,24 @@ object Graphs {
     val verts = directed.select(col("u").as("x")).distinct().cache()
     val tele = when(col("x").isin(seeds: _*), lit(1.0 / seeds.size))
       .otherwise(lit(0.0))
-    var ranks = verts.select(col("x"), tele.as("r"))
-    for (_ <- 1 to iters) {
+    val init = verts.select(col("x"), tele.as("r"))
+    val run = graft.util.Fixpoint.iterate("pageRankPersonalized", iters, init) { ranks =>
       val sums = ranks
         .join(outgoing, col("x") === col("u"))
         .select(col("v").as("x"), (col("r") / col("od")).as("cr"))
         .groupBy("x")
         .agg(sum(col("cr").cast("decimal(38,20)")).cast("double").as("m"))
-      ranks = verts
+      verts
         .join(sums, Seq("x"), "left")
         .select(col("x"),
           (lit(1 - damping) * tele +
             lit(damping) * coalesce(col("m"), lit(0.0))).as("r"))
     }
-    // loop-exit hygiene: see [[pageRank]]
-    val out = graft.util.Lineage.checkpoint(ranks)
+    val out = run.finish(_.df)
     graft.util.Lineage.free(eGen)
     outgoing.unpersist(blocking = false)
     verts.unpersist(blocking = false)
-    out.df
+    out
   }
 
   /** DuckDB spelling of [[pageRankPersonalized]] — the
@@ -717,6 +654,8 @@ object Graphs {
     * broadcast for the norm; `iters` is fixed and small, so the whole
     * op is `2·iters` joins regardless of data size.
     *
+    * Rounds and generations: [[graft.util.Fixpoint]].
+    *
     * @return ('hub'|'authority', vertex, score) — scores 6-dp, each
     *         side summing to ~1.
     */
@@ -724,61 +663,40 @@ object Graphs {
     import graft.queries.Det.r6
     import graft.util.Lineage
     require(iters >= 1, s"hitsBipartite needs iters >= 1, got $iters")
-    // the edge list is its OWN tracked generation (eager localCheckpoint,
-    // not a lazy cache): a lazy cache would first materialize inside
-    // iteration 1's generation checkpoint, whose registry diff would
-    // mis-attribute the edge blocks to that generation and free them on
-    // rotation — silently un-caching the loop invariant
+    // one eager materialization of the edge list: see [[pageRank]]
     val eGen = Lineage.checkpoint(edges.select(col("src"), col("dst")))
     val e = eGen.df
     val srcs = e.select(col("src").as("x")).distinct()
     def dsumRaw(c: org.apache.spark.sql.Column) =
       sum(c.cast("decimal(25,6)")).cast("double")
-    var hub = srcs.select(col("x"), lit(1.0).as("h"))
-    var auth: DataFrame = null
-    // Generation discipline (round-9 fix): each half-iteration's raw-sum
-    // frame ROTATES through an eager localCheckpoint (util/Lineage), not
-    // cache(). cache() materializes blocks but does NOT truncate the
-    // logical plan — iteration i's analyzer tree still embedded every
-    // prior generation twice (its L1 norm + the normalized join), so the
-    // tree grew ~4× per iteration and analysis/optimization alone took
-    // minutes (measured 586.9 s at sf0.1 for iters=4 under cache();
-    // ~3 s rotated). The checkpoint truncates lineage, so every
-    // half-iteration plans as one small join+aggregate, and freeing the
-    // previous generation keeps executor storage at two vertex-sized
-    // frames regardless of iters.
-    var aGen: Option[Lineage.Gen] = None
-    var hGen: Option[Lineage.Gen] = None
-    for (_ <- 1 to iters) {
-      val aG = Lineage.checkpoint(
-        e.join(hub.withColumnRenamed("x", "src"), "src")
-          .groupBy(col("dst").as("x")).agg(dsumRaw(col("h")).as("raw")))
-      // hub's backing generation was consumed by the checkpoint above;
-      // the previous auth generation by the previous hub checkpoint
-      hGen.foreach(Lineage.free)
-      aGen.foreach(Lineage.free)
-      aGen = Some(aG)
-      val ta = aG.df.agg(dsumRaw(col("raw")).as("t"))
-      auth = aG.df.crossJoin(broadcast(ta))
-        .select(col("x"), r6(col("raw") / col("t")).as("a"))
-      val hG = Lineage.checkpoint(
-        e.join(auth.withColumnRenamed("x", "dst"), "dst")
-          .groupBy(col("src").as("x")).agg(dsumRaw(col("a")).as("raw")))
-      hGen = Some(hG)
-      val th = hG.df.agg(dsumRaw(col("raw")).as("t"))
-      hub = hG.df.crossJoin(broadcast(th))
-        .select(col("x"), r6(col("raw") / col("t")).as("h"))
+    def norm(raw: DataFrame, score: String) = {
+      val t = raw.agg(dsumRaw(col("raw")).as("t"))
+      raw.crossJoin(broadcast(t)).select(col("x"), r6(col("raw") / col("t")).as(score))
     }
-    // the final hub/auth projections read only the two surviving
-    // checkpointed generations, so the edge blocks can go now; the final
-    // generations back the returned frame (bench/session hygiene or the
-    // ContextCleaner reaps them once the result is dropped)
+    // each half-iteration's raw-sum frame is a generation that its L1
+    // norm and the normalized join both read (cadence: graft.util.
+    // Fixpoint). Under cache() — blocks kept, plan not truncated —
+    // analysis alone took 586.9 s at sf0.1 for iters=4; ~3 s rotated.
+    val run = graft.util.Fixpoint.loop("hitsBipartite", iters, Nil, Seq(
+      "auth" -> { r =>
+        val hub = r.get("hub").fold(srcs.select(col("x"), lit(1.0).as("h")))(norm(_, "h"))
+        e.join(hub.withColumnRenamed("x", "src"), "src")
+          .groupBy(col("dst").as("x")).agg(dsumRaw(col("h")).as("raw"))
+      },
+      "hub" -> { r =>
+        e.join(norm(r("auth"), "a").withColumnRenamed("x", "dst"), "dst")
+          .groupBy(col("src").as("x")).agg(dsumRaw(col("a")).as("raw"))
+      }))
+    // the result reads only the two final generations (which back it
+    // until dropped), so the edge blocks can go now
+    val out = run.read(r =>
+      norm(r("hub"), "h").select(lit("hub").as("side"), col("x").as("vertex"),
+          col("h").as("score"))
+        .unionAll(norm(r("auth"), "a").select(lit("authority").as("side"),
+          col("x").as("vertex"), col("a").as("score")))
+        .orderBy("side", "vertex"))
     Lineage.free(eGen)
-    hub.select(lit("hub").as("side"), col("x").as("vertex"),
-        col("h").as("score"))
-      .unionAll(auth.select(lit("authority").as("side"),
-        col("x").as("vertex"), col("a").as("score")))
-      .orderBy("side", "vertex")
+    out
   }
 
   /** DuckDB spelling of [[hitsBipartite]]: unrolled CTE pairs, same
@@ -826,8 +744,7 @@ object Graphs {
     *
     * Same fixpoint discipline as [[sssp]]: the (count, sum) witness
     * pair is monotone under BFS relaxation, one 1-row driver scalar
-    * per round, lineage rotated through `localCheckpoint`, `maxRounds`
-    * a loud runaway guard.
+    * per round; rounds, guard and generations: [[graft.util.Fixpoint]].
     */
   def closenessCentrality(
       edges: DataFrame,
@@ -840,40 +757,23 @@ object Graphs {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     import spark.implicits._
     val seedDf = seeds.toDF("s")
-    var dist = seedDf.select(col("s"), col("s").as("x"), lit(0L).as("d"))
-    var state = (-1L, -1L)
-    var rounds = 0
-    var done = false
-    while (!done) {
-      var nxt = dist.withColumnRenamed("x", "u")
+    val run = graft.util.Fixpoint.converge("closenessCentrality", maxRounds,
+        seedDf.select(col("s"), col("s").as("x"), lit(0L).as("d")),
+        on = "d") { dist =>
+      dist.withColumnRenamed("x", "u")
         .join(e, Seq("u"))
         .select(col("s"), col("v").as("x"), (col("d") + 1L).as("d"))
         .unionAll(dist)
         .groupBy("s", "x").agg(min(col("d")).as("d"))
-      if (rounds % 8 == 7) nxt = nxt.localCheckpoint(eager = false)
-      nxt = nxt.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val row = nxt.agg(count(lit(1)), sum(col("d"))).head()
-      val s2 = (row.getLong(0), row.getLong(1))
-      dist.unpersist()
-      dist = nxt
-      done = s2 == state
-      state = s2
-      rounds += 1
-      if (!done && rounds >= maxRounds)
-        throw new IllegalStateException(
-          s"closenessCentrality did not settle in $maxRounds rounds")
     }
-    // loop-exit hygiene: see [[pageRank]]
-    val out = graft.util.Lineage.checkpoint(
-      dist.groupBy(col("s").as("seed"))
-        .agg(count(lit(1)).as("n_reached"), sum(col("d")).as("dist_sum"))
-        .select(col("seed"), col("n_reached"), col("dist_sum"),
-          when(col("dist_sum") > 0, graft.queries.Det.r6(
-            (col("n_reached") - 1).cast("double") /
-              col("dist_sum").cast("double"))).as("closeness")))
-    dist.unpersist(blocking = false)
+    val out = run.finish(_.df.groupBy(col("s").as("seed"))
+      .agg(count(lit(1)).as("n_reached"), sum(col("d")).as("dist_sum"))
+      .select(col("seed"), col("n_reached"), col("dist_sum"),
+        when(col("dist_sum") > 0, graft.queries.Det.r6(
+          (col("n_reached") - 1).cast("double") /
+            col("dist_sum").cast("double"))).as("closeness")))
     e.unpersist(blocking = false)
-    out.df
+    out
   }
 
   /** DuckDB spelling of [[closenessCentrality]]: `rounds` unrolled

@@ -44,10 +44,8 @@ object ProductQuantization {
 
   /** Train the m codebooks: fixed-iteration Lloyd keyed by subspace —
     * one distributed computation for all m subspaces, not m jobs.
-    * Returns (subspace, cluster, c: array<double>).
-    * `checkpointEvery`: lazy localCheckpoint of the codebook frame
-    * every N rounds so the plan stays bounded at high iteration counts
-    * (see [[Clustering.kmeans]]); 0 disables, results identical.
+    * Returns (subspace, cluster, c: array<double>). Rounds and
+    * generations: [[graft.util.Fixpoint]].
     */
   def train(
       emb: DataFrame,
@@ -56,14 +54,13 @@ object ProductQuantization {
       m: Int = 8,
       k: Int = 16,
       iters: Int = 2,
-      checkpointEvery: Int = 5,
   ): DataFrame = {
     val subs = subvectors(emb, idCol, vecCol, m)
     // per-subspace deterministic hash-sample init (same k vec_ids win in
     // every subspace — harmless: their SUBvectors differ per subspace)
     val w = Window.partitionBy("subspace")
       .orderBy(md5(concat(lit("pq"), col("vec_id").cast("string"))), col("vec_id"))
-    var centroids = subs
+    val init = subs
       .withColumn("cluster", (row_number().over(w) - 1).cast("int"))
       .filter(col("cluster") < k)
       .select(col("subspace"), col("cluster"), col("sv").as("c"))
@@ -76,22 +73,19 @@ object ProductQuantization {
         .select(col("vec_id"), col("subspace"),
           col("_best.cluster").as("cluster"), col("_best.d2").as("d2"))
 
-    for (i <- 1 to iters) {
+    graft.util.Fixpoint.iterate("ProductQuantization.train", iters, init) { centroids =>
       val assigned = assign(centroids)
         .join(subs, Seq("vec_id", "subspace"))
         .select(col("subspace"), col("cluster"),
           posexplode(col("sv")).as(Seq("pos", "x")))
-      centroids = assigned
+      assigned
         .groupBy("subspace", "cluster", "pos")
         .agg((sum(col("x").cast("decimal(38,20)")).cast("double") /
           count(lit(1))).as("m"))
         .groupBy("subspace", "cluster")
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           s => s("m")).as("c"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
-        centroids = centroids.localCheckpoint(eager = false)
-    }
-    centroids
+    }.df
   }
 
   /** Encode: nearest codebook entry per (vector, subspace) →

@@ -305,8 +305,8 @@ object Spatial {
     // and the border anti-join), and Spark 4.1's AQE does not reuse
     // canonically identical stages (the r15 surprisal finding), so
     // without materialization each consumer re-runs the union+aggregate
-    // over the cached pair list. Interleaved same-JVM A/B ×3 (r15
-    // session 2, ProbeCc): checkpointed core faster in every cycle,
+    // over the cached pair list. Interleaved same-JVM A/B ×3
+    // (OPTIMIZATION_r15.md §13): checkpointed core faster in every cycle,
     // min 11.7 vs 13.4 s, med 15.0 vs 19.1 s, output bit-identical.
     // (The sibling prev-generation CC shortcut was measured there too
     // and REJECTED: it saves one hook evaluation per round but costs

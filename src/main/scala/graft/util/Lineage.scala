@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Rotating local-checkpoint bookkeeping for iterative operators.
   *
@@ -15,37 +16,26 @@ import org.apache.spark.sql.DataFrame
   * rounds × |corpus| rows of executor storage it will never read again.
   *
   * [[checkpoint]] eagerly materializes and records which persistent-RDD
-  * ids back the frame; [[rotate]] checkpoints the next generation and
-  * frees the previous one; [[free]] drops a generation's blocks.
+  * id backs the frame; [[free]] drops a generation's blocks. Loops
+  * rotate generations through [[Fixpoint]], which is built on these.
   *
   * Contract: a freed generation is UNREADABLE (local checkpoints
-  * truncate lineage — there is nothing to recompute from), so callers
-  * only rotate once the next generation is materialized, which
-  * [[rotate]] guarantees by checkpointing eagerly first. Id attribution
-  * diffs the context's persistent-RDD registry around the checkpoint
-  * call, so concurrent persists from OTHER driver threads can be
-  * mis-attributed — all of this library's iterative loops are
-  * single-threaded on the driver; revisit if that changes.
+  * truncate lineage — there is nothing to recompute from), so a
+  * generation is freed only once its successor is materialized, which
+  * the eager [[checkpoint]] guarantees. A generation owns only the RDD
+  * its checkpoint wrote, never a lazy cache that first materialized in
+  * the same job, so freeing it un-caches nothing else.
   */
 object Lineage {
 
   /** A materialized generation: the checkpointed frame plus the
-    * persistent-RDD ids holding its blocks. */
+    * persistent-RDD id holding its blocks. */
   final case class Gen(df: DataFrame, ids: Set[Int])
 
   /** Eagerly localCheckpoint `df` and record its block footprint. */
   def checkpoint(df: DataFrame): Gen = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     val out = df.localCheckpoint()
-    Gen(out, (sc.getPersistentRDDs.keySet -- before).toSet)
-  }
-
-  /** Checkpoint the next generation, then free the previous one. */
-  def rotate(next: DataFrame, prev: Gen): Gen = {
-    val out = checkpoint(next)
-    free(prev)
-    out
+    Gen(out, out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet)
   }
 
   /** Drop a generation's blocks (non-blocking). The frame must not be

@@ -36,6 +36,23 @@ class GraphsSpec extends SparkTestBase {
     assert(byV(2L) > byV(1L))
   }
 
+  test("pageRank at 20 iterations: rotation keeps mass, symmetry and the pinned ranks") {
+    // 20 rounds cross the every-8th-round cut twice (rounds 8 and 16);
+    // branches 0-1-2 and 0-3-4 mirror each other, 0-5 is a lone leaf
+    val g = Seq((0L, 1L), (1L, 2L), (0L, 3L), (3L, 4L), (0L, 5L)).toDF("u", "v")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val r = Graphs.pageRank(g, damping = 0.85, iters = 20)
+      .orderBy("x").as[(Long, Double)].collect().toMap
+    assert((sc.getPersistentRDDs.keySet -- before).size <= 2)
+    assert(math.abs(r.values.sum - 1.0) < 1e-12)
+    assert(r(1L) == r(3L) && r(2L) == r(4L))
+    // exact doubles from the uncut loop before the driver existed
+    assert(r == Map(0L -> 0.282093794336242, 1L -> 0.1975367124387624,
+      2L -> 0.10895310283187902, 3L -> 0.1975367124387624,
+      4L -> 0.10895310283187902, 5L -> 0.10492657512247525))
+  }
+
   test("triangleCounts: one triangle plus a tail counts only the cycle vertices") {
     val g = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)).toDF("u", "v")
     val got = Graphs.triangleCounts(g)

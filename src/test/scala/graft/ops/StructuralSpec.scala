@@ -39,6 +39,24 @@ class StructuralSpec extends SparkTestBase {
     assert(got.forall(_.isNullAt(1)))
   }
 
+  test("sssp and closeness on a 24-hop path: exact, and no generation left behind") {
+    // 24 rounds cross three of the every-8th-round cuts the loops once
+    // took; each round's step reads the previous generation twice, so a
+    // lazy generation between cuts doubled the plan every round
+    val path = (0L until 24L).map(i => (i, i + 1, 1L)).toDF("u", "v", "w")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val dist = Graphs.sssp(path, source = 0L).as[(Long, Long)].collect().toMap
+    assert(dist == (0L to 24L).map(i => i -> i).toMap)
+    assert((sc.getPersistentRDDs.keySet -- before).size <= 2)
+    val before2 = sc.getPersistentRDDs.keySet
+    val c = Graphs.closenessCentrality(path.select("u", "v"), Seq(0L)).collect()
+    assert(c.length == 1)
+    assert(c(0).getLong(0) == 0L && c(0).getLong(1) == 25L && c(0).getLong(2) == 300L)
+    assert(c(0).getDouble(3) == math.floor(24.0 / 300.0 * 1e6 + 0.5) / 1e6) // r6
+    assert((sc.getPersistentRDDs.keySet -- before2).size <= 2)
+  }
+
   // ---- Graphs.pageRankWeighted / TextRank --------------------------------
 
   test("pageRankWeighted: ranks sum to 1 and weight skews the flow") {
